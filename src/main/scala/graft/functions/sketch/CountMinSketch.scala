@@ -15,20 +15,19 @@ import org.apache.spark.sql.expressions.Aggregator
   * intentionally NOT bit-identical to Rust ahash (SURVEY §7 hard-part 3:
   * replicate the contract, not the hashes).
   *
-  * Production paths: Spark's builtin `count_min_sketch` aggregate and
-  * `approx_count_distinct` (HLL++) — these Aggregators exist for parity
-  * experiments with the reference's semantics (saturation, min-of-k,
-  * biased-low presence estimate).
+  * Builtin alternatives: Spark's `count_min_sketch` aggregate and
+  * `approx_count_distinct` (HLL++). These sketches keep the reference's
+  * semantics (saturation, min-of-k, biased-low presence estimate);
+  * [[buildCms]] is the distributed CMS build `NgramOps.topKApprox` runs.
   */
 object Sketches {
 
-  /** Deterministic 64-bit hash of (seed row i, item). */
-  private[sketch] def hash(item: String, i: Int, seed: Int): Long =
-    hashBytes(item.getBytes("UTF-8"), i, seed)
+  private def utf8(item: String): Array[Byte] =
+    item.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
-  /** Same hash over pre-encoded UTF-8 bytes — lets codegen'd probes feed a
-    * UTF8String's bytes in directly with no java.lang.String round-trip;
-    * bit-identical to [[hash]] by construction.
+  /** Deterministic 64-bit hash of (seed row i, item's UTF-8 bytes). Callers
+    * encode once per item and hash every row off the same bytes, so a
+    * String item and a UTF8String's bytes land in the same cells.
     */
   private[graft] def hashBytes(bytes: Array[Byte], i: Int, seed: Int): Long = {
     // FNV-1a over the UTF-8 bytes, row-and-seed mixed in — stable everywhere.
@@ -46,10 +45,14 @@ object Sketches {
     * min over rows (counter.rs:163-177 contract).
     */
   final case class CMS(width: Int, depth: Int, seed: Int, cells: Array[Long]) {
-    def add(item: String, by: Long = 1L): CMS = {
+    def add(item: String, by: Long = 1L): CMS = addBytes(utf8(item), by)
+
+    /** [[add]] over pre-encoded UTF-8 bytes (one encode for all depth rows). */
+    def addBytes(bytes: Array[Byte], by: Long = 1L): CMS = {
       var i = 0
       while (i < depth) {
-        val c = i * width + java.lang.Math.floorMod(hash(item, i, seed), width.toLong).toInt
+        val c = i * width +
+          java.lang.Math.floorMod(hashBytes(bytes, i, seed), width.toLong).toInt
         cells(c) = math.min(U32Max, cells(c) + by)
         i += 1
       }
@@ -60,7 +63,7 @@ object Sketches {
       while (i < cells.length) { cells(i) = math.min(U32Max, cells(i) + o.cells(i)); i += 1 }
       this
     }
-    def estimate(item: String): Long = estimateBytes(item.getBytes("UTF-8"))
+    def estimate(item: String): Long = estimateBytes(utf8(item))
 
     /** [[estimate]] over pre-encoded UTF-8 bytes (one encode for all depth
       * rows; the codegen probe path).
@@ -83,45 +86,16 @@ object Sketches {
       CMS(width, depth, seed, new Array[Long](width * depth))
   }
 
-  /** Aggregator building a CMS over a string column. */
-  class CountMinAggregator(width: Int, depth: Int, seed: Int)
-      extends Aggregator[String, CMS, CMS] {
-    override def zero: CMS = CMS.empty(width, depth, seed)
-    override def reduce(b: CMS, a: String): CMS = if (a == null) b else b.add(a)
-    override def merge(b1: CMS, b2: CMS): CMS = b1.merge(b2)
-    override def finish(r: CMS): CMS = r
-    override def bufferEncoder: Encoder[CMS] = Encoders.kryo[CMS]
-    override def outputEncoder: Encoder[CMS] = Encoders.kryo[CMS]
-  }
-
-  /** [[CountMinAggregator]] over pre-counted (item, count) rows — the
-    * counted-vocab formulation. Cells are BIT-IDENTICAL to per-occurrence
-    * adds (increments are saturating sums, so add(g) × n ≡ add(g, n)),
-    * but the aggregate runs over |vocab| rows instead of the full gram
-    * stream and its partial buffers merge across however few partitions
-    * the counted frame has — for consumers that already paid an exact
-    * count (the A4 contract query needs both sides anyway).
-    */
-  class CountMinWeightedAggregator(width: Int, depth: Int, seed: Int)
-      extends Aggregator[(String, Long), CMS, CMS] {
-    override def zero: CMS = CMS.empty(width, depth, seed)
-    override def reduce(b: CMS, a: (String, Long)): CMS =
-      if (a == null || a._1 == null) b else b.add(a._1, a._2)
-    override def merge(b1: CMS, b2: CMS): CMS = b1.merge(b2)
-    override def finish(r: CMS): CMS = r
-    override def bufferEncoder: Encoder[CMS] = Encoders.kryo[CMS]
-    override def outputEncoder: Encoder[CMS] = Encoders.kryo[CMS]
-  }
-
   /** Bloom-presence table (u8 cells, k hash rows into ONE array). estimate =
     * nonzero cell count — the reference's biased-low unique estimate
     * (unique.rs:91-148, counter.rs:95-104).
     */
   final case class Presence(width: Int, hashes: Int, seed: Int, cells: Array[Byte]) {
     def add(item: String): Presence = {
+      val bytes = utf8(item)
       var i = 0
       while (i < hashes) {
-        val c = java.lang.Math.floorMod(hash(item, i, seed), width.toLong).toInt
+        val c = java.lang.Math.floorMod(hashBytes(bytes, i, seed), width.toLong).toInt
         if (cells(c) == 0) cells(c) = 1
         i += 1
       }
@@ -134,9 +108,10 @@ object Sketches {
     }
     def nonzero: Long = cells.count(_ != 0).toLong
     def contains(item: String): Boolean = {
+      val bytes = utf8(item)
       var i = 0
       while (i < hashes) {
-        if (cells(java.lang.Math.floorMod(hash(item, i, seed), width.toLong).toInt) == 0)
+        if (cells(java.lang.Math.floorMod(hashBytes(bytes, i, seed), width.toLong).toInt) == 0)
           return false
         i += 1
       }
@@ -159,12 +134,33 @@ object Sketches {
     override def outputEncoder: Encoder[Presence] = Encoders.kryo[Presence]
   }
 
-  /** Distributed CMS build over a DataFrame string column. */
+  /** Distributed CMS build over a DataFrame string column: each input
+    * partition fills ONE local sketch straight from the column's UTF-8
+    * bytes on the internal rows (no String decode, one encode per row for
+    * all depth hashes), and the partition sketches merge by cell-wise
+    * saturating sum through `treeReduce` — no exchange of the column, and
+    * O(√partitions) sketches reach the driver. Saturating sums
+    * are associative and commutative, so the cells are bit-identical to a
+    * sequential build whatever the partitioning. `weight` names a count
+    * column for pre-counted (item, count) rows: add(g, n) ≡ n × add(g),
+    * so the counted-vocab build's cells equal the per-occurrence build's.
+    * Null items (and null weights) add nothing.
+    */
   def buildCms(df: DataFrame, column: String, width: Int = 1 << 16, depth: Int = 5,
-               seed: Int = 42): CMS = {
-    import df.sparkSession.implicits._
-    val agg = new CountMinAggregator(width, depth, seed)
-    df.select(column).as[String].select(agg.toColumn).head()
+               seed: Int = 42, weight: Option[String] = None): CMS = {
+    val cols = org.apache.spark.sql.functions.col(column) +:
+      weight.toSeq.map(w => org.apache.spark.sql.functions.col(w).cast("long"))
+    val weighted = weight.isDefined
+    val partial = df.select(cols: _*).queryExecution.toRdd.mapPartitions { rows =>
+      val cms = CMS.empty(width, depth, seed)
+      rows.foreach { r =>
+        if (!r.isNullAt(0) && !(weighted && r.isNullAt(1)))
+          cms.addBytes(r.getUTF8String(0).getBytes, if (weighted) r.getLong(1) else 1L)
+      }
+      Iterator.single(cms)
+    }
+    if (partial.partitions.isEmpty) CMS.empty(width, depth, seed)
+    else partial.treeReduce(_.merge(_))
   }
 
   def buildPresence(df: DataFrame, column: String, width: Int = 1 << 20,

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextFunctions._
 
@@ -13,6 +15,9 @@ import graft.functions.TextFunctions._
   *    shuffle on the group key → final agg; no driver-side loops.
   *  - topk/botk end in TakeOrderedAndProject (k rows per partition are
   *    pre-selected map-side, only k×partitions rows reach the driver).
+  *  - `topk --approx` ([[topKApprox]]) is the exception: two scan-fused
+  *    passes whose only driver traffic is partition sketches and k rows
+  *    per partition; no gram crosses an exchange.
   *  - for very large n (n=100 grams) use [[TopK.hashed]] which shuffles an
   *    8-byte xxhash64 of the n-gram instead of the string and joins the k
   *    winning strings back afterwards.
@@ -153,38 +158,33 @@ object NgramOps {
       .select(explode(ngrams(tokens(col(textCol), uax29), n)).as("ngram"))
       .agg(count_distinct(col("ngram")).as("n_unique"))
 
-  /** `wimbd unique` approximate — HLL++, a strictly better estimator than the
-    * reference's collision-biased Bloom cell count.
-    */
   /** `wimbd topk` APPROXIMATE mode — the reference's memory-bounded
     * counting-sketch contract (sketch build src/ngrams/counter.rs:43-194,
     * threshold gate + upper-bound reporting src/cmd/topk.rs:205-242,315-321)
-    * restated for a cluster: the shared-memory atomic counter table becomes
-    * partial count-min sketches merged by a mergeable Aggregator (pass 1),
-    * broadcast to executors; pass 2 re-streams n-grams, keeps those whose
-    * estimate clears `threshold` (the reference's `--threshold` pruning),
-    * dedupes the (small) survivor set and ranks by estimate. Reported
+    * restated for a cluster as two scan-fused passes, neither of which
+    * shuffles the gram stream:
+    *  - pass 1 ([[graft.functions.sketch.Sketches.buildCms]]): each input
+    *    partition fills one local sketch from the grams' UTF-8 bytes; the
+    *    partition sketches merge on the driver through `treeReduce`;
+    *  - pass 2: the merged sketch is broadcast, the grams re-stream through
+    *    the codegen'd [[graft.functions.expressions.CmsEstimate]] probe,
+    *    and each partition keeps at most `k` distinct (estimate desc,
+    *    gram asc) entries among those clearing `threshold` (the
+    *    reference's `--threshold` pruning; see [[TopDistinct]]). The
+    *    driver merges those k × partitions rows.
+    * Exact against the group-by-gram formulation: with the sketch fixed,
+    * the estimate depends only on the gram, so a gram in the global top-k
+    * is in the local top-k of every partition holding it. Reported
     * `count` is an upper bound (`≤`), exactly as the reference prints.
-    * Memory is O(width × depth) regardless of corpus size.
+    * Memory is O(width × depth) per task regardless of corpus size.
     */
   def topKApprox(docs: DataFrame, textCol: String, n: Int, k: Int,
                  width: Int = 1 << 18, depth: Int = 5, seed: Int = 42,
                  threshold: Long = 1L, uax29: Boolean = true): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val grams = graft.Par.fanOut(docs)
       .select(explode(ngrams(tokens(col(textCol), uax29), n)).as("ngram"))
-    val agg = new graft.functions.sketch.Sketches.CountMinAggregator(width, depth, seed)
-    val cms = grams.as[String].select(agg.toColumn).head()
-    val bc = spark.sparkContext.broadcast(cms)
-    // codegen'd probe (no ScalaUDF boundary): pass 2 stays one fused stage
-    val est = org.apache.spark.sql.graft.Bridge.column(
-      graft.functions.expressions.CmsEstimate(
-        org.apache.spark.sql.graft.Bridge.expression(col("ngram")), bc))
-    grams.select(col("ngram"), est.as("count"))
-      .where(col("count") >= threshold)
-      .groupBy("ngram").agg(max("count").as("count"))
-      .orderBy(desc("count"), asc("ngram")).limit(k)
+    val cms = graft.functions.sketch.Sketches.buildCms(grams, "ngram", width, depth, seed)
+    approxTopK(grams, "ngram", cms, k, threshold)
   }
 
   /** [[topKApprox]] computed from a PRE-COUNTED `(gram, count)` vocab
@@ -193,27 +193,74 @@ object NgramOps {
     * bound checks anyway). Output is row-identical to [[topKApprox]] on
     * the stream those counts summarize: the sketch ingests per-gram
     * counts (cell-bit-identical to per-occurrence adds, since increments
-    * are saturating sums) and each distinct gram probes once (the
-    * stream formulation's groupBy/max collapses duplicate probes of the
-    * same constant estimate). Two vocab-sized passes, zero corpus scans.
+    * are saturating sums) and each distinct gram probes once. Two
+    * vocab-sized passes, zero corpus scans.
     */
   def topKApproxFromCounts(counts: DataFrame, gramCol: String,
                            cntCol: String, k: Int,
                            width: Int = 1 << 18, depth: Int = 5,
                            seed: Int = 42, threshold: Long = 1L): DataFrame = {
-    val spark = counts.sparkSession
-    import spark.implicits._
-    val agg = new graft.functions.sketch.Sketches.CountMinWeightedAggregator(
-      width, depth, seed)
-    val cms = counts.select(col(gramCol), col(cntCol).cast("long"))
-      .as[(String, Long)].select(agg.toColumn).head()
+    val cms = graft.functions.sketch.Sketches.buildCms(counts, gramCol, width, depth, seed,
+      weight = Some(cntCol))
+    approxTopK(counts, gramCol, cms, k, threshold)
+  }
+
+  /** Pass 2 of the count-min top-k: probe every gram of `grams` against
+    * the broadcast sketch, select per partition, merge on the driver, and
+    * return the ranked `(ngram, count)` rows as a local frame.
+    */
+  private def approxTopK(grams: DataFrame, gramCol: String,
+                         cms: graft.functions.sketch.Sketches.CMS,
+                         k: Int, threshold: Long): DataFrame = {
+    val spark = grams.sparkSession
     val bc = spark.sparkContext.broadcast(cms)
+    // codegen'd probe (no ScalaUDF boundary): pass 2 stays one fused stage
     val est = org.apache.spark.sql.graft.Bridge.column(
       graft.functions.expressions.CmsEstimate(
         org.apache.spark.sql.graft.Bridge.expression(col(gramCol)), bc))
-    counts.select(col(gramCol).as("ngram"), est.as("count"))
-      .where(col("count") >= threshold)
+    val local = grams.select(col(gramCol), est).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val top = new TopDistinct(k, threshold)
+        rows.foreach(r => if (!r.isNullAt(0)) top.offer(r.getLong(1), r.getUTF8String(0)))
+        top.entries.iterator
+      }.collect()
+    bc.destroy()
+    val top = new TopDistinct(k, threshold)
+    local.foreach(e => top.offer(e.est, e.gram))
+    val rows = top.entries.map(e => Row(e.gram.toString, e.est))
+    // orderBy + limit plans one ordered output partition, as topK's does
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        StructType(Seq(StructField("ngram", StringType), StructField("count", LongType))))
       .orderBy(desc("count"), asc("ngram")).limit(k)
+  }
+
+  /** One ranked entry of [[TopDistinct]]. */
+  private[graft] final case class Ranked(est: Long, gram: UTF8String)
+
+  /** Bounded ordered set of at most `k` DISTINCT (est desc, gram asc)
+    * entries with `est >= threshold` — the per-partition selector of
+    * [[topKApprox]]'s pass 2 and its driver-side merge. Grams compare as
+    * UTF8String bytes, Spark's `asc` order on strings. Offered grams are
+    * copied only when admitted, so callers may pass row-owned buffers.
+    * Exact for keys that depend only on the gram: an entry evicted by k
+    * better ones can never re-qualify, since the k-th key only tightens.
+    */
+  private[graft] final class TopDistinct(k: Int, threshold: Long) {
+    private val set = new java.util.TreeSet[Ranked]((a: Ranked, b: Ranked) =>
+      if (a.est != b.est) java.lang.Long.compare(b.est, a.est)
+      else a.gram.binaryCompare(b.gram))
+
+    def offer(est: Long, gram: UTF8String): Unit =
+      if (est >= threshold && k > 0) {
+        val e = Ranked(est, gram)
+        if ((set.size < k || set.comparator.compare(e, set.last) < 0) && !set.contains(e)) {
+          set.add(Ranked(est, gram.copy()))
+          if (set.size > k) set.pollLast()
+        }
+      }
+
+    /** The kept entries, best first. */
+    def entries: Array[Ranked] = set.toArray(new Array[Ranked](0))
   }
 
   /** Distinct n-gram counts for SEVERAL n in one corpus pass: every doc
@@ -232,6 +279,9 @@ object NgramOps {
       .groupBy("n").agg(count_distinct(col("ngram")).as("n_unique"))
   }
 
+  /** `wimbd unique` approximate — HLL++, a strictly better estimator than the
+    * reference's collision-biased Bloom cell count.
+    */
   def uniqueApprox(docs: DataFrame, textCol: String, n: Int, rsd: Double = 0.01,
                    uax29: Boolean = true): DataFrame =
     graft.Par.fanOut(docs)

@@ -168,16 +168,14 @@ object NgramQueries extends QueryPack {
       // and ≤ the total gram stream size. The bound contracts hold for ANY
       // sketch geometry (min-of-k never under-counts; nothing exceeds the
       // stream total), so use an index-sized table here: the 1<<18 default
-      // is a 10.5 MB Array[Long] per partial buffer, and alloc+Kryo+merge
-      // of 32 of them was ~90% of this query's cost (measured: CMS agg
-      // 3-11 s at width 1<<18 vs <0.5 s at 1<<15, row count irrelevant).
+      // is a 10.5 MB Array[Long] per partition sketch, allocated, shipped
+      // and merged once per partition (measured under the former Kryo
+      // aggregate: 3-11 s at width 1<<18 vs <0.5 s at 1<<15).
       // Built FROM the exact counts this query needs anyway (row-identical
       // to the stream formulation, see topKApproxFromCounts): the sketch's
       // two gram passes collapse into the one exact aggregation above, and
-      // the partial CMS buffer count follows the vocab frame's (AQE-
-      // coalesced) partitions instead of the corpus scan's — the r12
-      // variance source (samples 2.46-5.06 s) was per-scan-partition
-      // buffer alloc+merge
+      // the partition sketch count follows the vocab frame's partitions
+      // instead of the corpus scan's
       val approx = NgramOps.topKApproxFromCounts(exact, "ngram", "exact_cnt",
         k = 20, width = 1 << 15)
       val joined = approx.join(exact, "ngram").localCheckpoint()

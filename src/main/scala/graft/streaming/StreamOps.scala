@@ -255,13 +255,15 @@ object StreamOps {
               Map.empty))
             // hot loop: fold into ONE mutable map and update state once —
             // a per-gram case-class copy + immutable-map update was pure
-            // GC churn at n-gram stream volumes (the CMS add is in-place)
+            // GC churn at n-gram stream volumes (the CMS add is in-place,
+            // and one UTF-8 encode feeds both the add and the estimate)
             var cms = s0.cms
             val cand = scala.collection.mutable.Map.empty[String, Long]
             cand ++= s0.cand
             rows.foreach { case (_, _, _, gram) =>
-              cms = cms.add(gram)
-              cand.update(gram, cms.estimate(gram))
+              val bytes = gram.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+              cms = cms.addBytes(bytes)
+              cand.update(gram, cms.estimateBytes(bytes))
               // prune lazily: keep the top maxCandidates when 2× over budget
               if (cand.size > 2 * maxCandidates) {
                 val keep = cand.toSeq.sortBy { case (g, est) => (-est, g) }

@@ -142,4 +142,101 @@ class SketchSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(fromCounts === fromStream)
   }
+
+  /** Brute-force driver reference for topKApprox: one local sketch over
+    * the whole gram stream, every distinct gram probed, sorted by
+    * (estimate desc, UTF-8 bytes asc), first k kept.
+    */
+  private def bruteTopK(docs: Seq[String], n: Int, k: Int, width: Int, depth: Int,
+                        seed: Int, threshold: Long): Seq[(String, Long)] = {
+    val grams = docs.flatMap(_.split(" ").sliding(n).filter(_.length == n).map(_.mkString(" ")))
+    val cms = CMS.empty(width, depth, seed)
+    grams.foreach(cms.add(_))
+    val utf8Order: Ordering[String] = (a, b) =>
+      org.apache.spark.unsafe.types.UTF8String.fromString(a)
+        .binaryCompare(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+    grams.distinct.map(g => g -> cms.estimate(g)).filter(_._2 >= threshold)
+      .sortWith { case ((ga, ea), (gb, eb)) => ea > eb || (ea == eb && utf8Order.lt(ga, gb)) }
+      .take(k)
+  }
+
+  test("topKApprox == brute-force driver reference (partitions, collision ties, threshold, k, empty)") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    // skewed vocab with multi-byte words: U+1D4B3 sorts before U+FF21 in
+    // UTF-16 but after it in UTF-8, so the gram tie-break must follow
+    // UTF-8 byte order (Spark's string order), not java.lang.String order
+    val vocab = Vector("the", "of", "and", "a", "to", "in", "cat", "dog", "é", "日本",
+      "\uD835\uDCB3", "\uFF21", "zz", "ab", "ba", "x", "y", "q", "w", "e", "r") ++
+      (0 until 20).map(i => s"t$i")
+    val rng = new scala.util.Random(77)
+    val texts = Seq.fill(300) {
+      Seq.fill(3 + rng.nextInt(10))(vocab(math.min(vocab.size - 1,
+        (math.pow(vocab.size.toDouble, rng.nextDouble()) - 1).toInt))).mkString(" ")
+    }
+    // repartitioned to 7 (topKApprox's fanOut may re-spread small inputs
+    // over the session's cores); width 1<<6 forces collisions, so many
+    // grams tie on the estimate at the k-th place
+    val docs = texts.toDF("text").repartition(7)
+    val (w, d, sd) = (1 << 6, 3, 11)
+    val distinct = texts.flatMap(_.split(" ").sliding(2).filter(_.length == 2)
+      .map(_.mkString(" "))).distinct.size
+    // a k whose k-th and (k+1)-th estimates tie: the cut falls inside a tie
+    val ranked = bruteTopK(texts, 2, distinct, w, d, sd, 1L)
+    val kTie = (10 until ranked.size).find(i => ranked(i - 1)._2 == ranked(i)._2)
+    assert(kTie.isDefined && ranked(kTie.get)._2 >= 3L)
+    // a k whose cut keeps a different gram set under UTF-16 order
+    val byUtf16 = ranked.sortWith { case ((ga, ea), (gb, eb)) => ea > eb || (ea == eb && ga < gb) }
+    val kOrder = (1 until ranked.size).find(i => ranked.take(i).toSet != byUtf16.take(i).toSet)
+    assert(kOrder.isDefined)
+    for (threshold <- Seq(1L, 3L); k <- Seq(5, kTie.get, kOrder.get, distinct + 10)) {
+      val got = graft.operators.NgramOps.topKApprox(docs, "text", n = 2, k = k,
+          width = w, depth = d, seed = sd, threshold = threshold, uax29 = false)
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      val want = bruteTopK(texts, 2, k, w, d, sd, threshold)
+      assert(got === want, s"threshold=$threshold k=$k")
+      if (k > distinct && threshold == 1L) assert(got.size === distinct)
+    }
+    val empty = graft.operators.NgramOps.topKApprox(Seq.empty[String].toDF("text").repartition(7),
+      "text", n = 2, k = 5, width = w, depth = d, seed = sd, uax29 = false)
+    assert(empty.columns.toSeq === Seq("ngram", "count"))
+    assert(empty.collect().isEmpty)
+  }
+
+  test("TopDistinct: repeated grams never emitted twice; at most k rows per partition") {
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.operators.NgramOps.TopDistinct
+    val est = Map("a" -> 9L, "b" -> 7L, "c" -> 7L, "d" -> 5L, "e" -> 2L, "f" -> 1L)
+    // each partition repeats grams within itself and shares grams with
+    // the others; "a" keeps coming back after it was admitted, "e" after
+    // it was evicted
+    val parts = Seq(
+      Seq("e", "a", "a", "d", "e", "b", "a", "e", "c", "a"),
+      Seq("f", "c", "c", "d", "b", "d", "a"),
+      Seq("e", "e", "f", "f", "e"))
+    val k = 3
+    val locals = parts.map { p =>
+      val t = new TopDistinct(k, threshold = 2L)
+      // one buffer overwritten per row, like an unsafe row iterator's:
+      // admitted grams must not alias it
+      val buf = new Array[Byte](1)
+      val row = UTF8String.fromBytes(buf)
+      p.foreach { g => buf(0) = g(0).toByte; t.offer(est(g), row) }
+      t.entries.map(e => (e.gram.toString, e.est)).toSeq
+    }
+    locals.foreach { l =>
+      assert(l.size <= k)
+      assert(l.map(_._1).distinct.size === l.size)
+      assert(l.forall(_._2 >= 2L))
+    }
+    assert(locals(0) === Seq(("a", 9L), ("b", 7L), ("c", 7L)))
+    assert(locals(2) === Seq(("e", 2L))) // "f" is below the threshold
+    val merged = new TopDistinct(k, threshold = 2L)
+    locals.flatten.foreach { case (g, e) => merged.offer(e, UTF8String.fromString(g)) }
+    assert(merged.entries.map(e => (e.gram.toString, e.est)).toSeq ===
+      Seq(("a", 9L), ("b", 7L), ("c", 7L)))
+    val none = new TopDistinct(0, 1L)
+    none.offer(9L, UTF8String.fromString("a"))
+    assert(none.entries.isEmpty)
+  }
 }
