@@ -268,6 +268,13 @@ object Cli {
     eff.toMap
   }
 
+  /** Whether `df` has no rows, in ONE job over every partition: for drop
+    * batches and null-id probes, which scan them all when the answer is
+    * yes. Corpus-sized frames keep `Dataset.isEmpty`'s early-exit ramp.
+    */
+  private def probeEmpty(df: DataFrame): Boolean =
+    Gather.bounded(df, 0).nonEmpty
+
   /** Read-or-pin the posting id mode ("id" = the corpus's own id field,
     * "path-line" = the full-path synthetic {md5(path)}-{line} id) for a
     * drop-directory state dir. The mode is decided on the FIRST non-empty
@@ -807,22 +814,21 @@ object Cli {
             : Seq[Seq[String]] = {
           requireBenchCols(cols, "a used field")
           val used = cols.map(c => trim(col(c).cast("string")))
-          val rows = bench
+          val rows = Gather.bounded(bench
             .select(used: _*)
-            // null/blank RAW values drop before the collect so they
+            // null/blank RAW values drop before the gather so they
             // neither count against the cap nor reach the driver; the
             // post-fold filter below catches analyzer-stripped values
             .where(used.map(c => c.isNotNull && length(c) > 0)
-              .reduce(_ && _))
-            .limit(benchCap + 1).collect()
-          require(rows.length <= benchCap, s"contaminate: benchmark " +
+              .reduce(_ && _)), benchCap)
+          require(rows.nonEmpty, s"contaminate: benchmark " +
             s"exceeds $benchCap rows — benchmark corpora must be " +
             "benchmark-sized (they broadcast into the corpus scan)")
           // exclusion runs AFTER the fold: the analyzer can strip a
           // punctuation-only value to "" (the match-everything empty
           // phrase under uax29), and a blank field silently weakens the
           // ALL-fields conjunction — drop the row either way
-          rows.map(r => cols.indices.map(i => fold(r.getString(i))))
+          rows.get.map(r => cols.indices.map(i => fold(r.getString(i))))
             .filter(_.forall(_.trim.nonEmpty)).map(_.toSeq).toSeq
         }
         // --follow STATE: INCREMENTAL contamination tracking over a drop
@@ -1242,9 +1248,9 @@ object Cli {
             // shards sharing a basename must not collide.
             val df = readProjected(spark, fresh,
               cfg("fixMojibake").toBoolean, cfg("analyzed").toBoolean)
-            val empty = df.isEmpty
+            val empty = probeEmpty(df)
             val mode = pinnedIdMode(fs, stateDir,
-              if (empty) None else Some(df.where(col("id").isNull).isEmpty),
+              if (empty) None else Some(probeEmpty(df.where(col("id").isNull))),
               "index --follow")
             val (keyed, idc) =
               if (mode == "id") (df, "id")
@@ -1486,7 +1492,7 @@ object Cli {
               Corpus.readJsonl(spark, Seq(batchDir)), "__plid", fullPath = true)
             .localCheckpoint(eager = true)
           try {
-          val wEmpty = written.isEmpty
+          val wEmpty = probeEmpty(written)
           if (!wEmpty)
             operators.Dedup.appendHashState(written, md5(col("text")), hashState)
           table.foreach { t =>
@@ -1524,7 +1530,7 @@ object Cli {
             val srcEmpty = if (haveIndex) wEmpty else src.isEmpty
             val mode = pinnedIdMode(fs, stateDir,
               if (srcEmpty) None
-              else Some(src.where(col("id").isNull).isEmpty), "ingest")
+              else Some(probeEmpty(src.where(col("id").isNull))), "ingest")
             // rebuilds in id mode must keep only the LATEST batch's row
             // per corpus id: an id re-dropped with corrected text passed
             // exact dedup, and the lost upsert-maintained index held only
@@ -1696,9 +1702,9 @@ object Cli {
             // batch must embed identically-normalized text
             val df = readProjected(spark, fresh,
               cfg("fixMojibake").toBoolean, cfg("analyzed").toBoolean)
-            val empty = df.isEmpty
+            val empty = probeEmpty(df)
             val mode = pinnedIdMode(fs, stateDir,
-              if (empty) None else Some(df.where(col("id").isNull).isEmpty),
+              if (empty) None else Some(probeEmpty(df.where(col("id").isNull))),
               "ann --follow")
             val (keyed, idc) =
               if (mode == "id") (df, "id")

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level optimizer tuning for the engine's workload shape.
+/** Session-level tuning for the engine's workload shape: two settings,
+  * both planner choices this workload always wants.
   *
   * Every generator in this library explodes a COMPUTED array (n-grams,
   * MinHash signatures, winnowing fingerprints, bigram structs) — never a
@@ -17,9 +18,12 @@ import org.apache.spark.sql.SparkSession
   * (the rule's only benefit — skipping rows whose stored array is empty —
   * never applies here).
   *
-  * `spark.sql.optimizer.excludedRules` is a runtime conf read per
-  * optimization pass, so tuning works on an already-built session; existing
-  * exclusions are preserved.
+  * The engine's bucketed tables exist for bucket pruning, so the
+  * auto-bucketed-scan heuristic is turned off (see [[tune]]).
+  *
+  * Both are runtime confs read per planning pass, so tuning works on an
+  * already-built session; existing rule exclusions are preserved. Bounded
+  * driver gathers need no session setting: [[Gather]] runs each as one job.
   */
 object Sessions {
 
@@ -39,19 +43,6 @@ object Sessions {
     // lookup back into a full scan of the index. Pruning > the heuristic's
     // batch-coalescing win for this workload shape.
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    // every capped driver gather in this engine (centroid frames, band-key
-    // prunes, sorted-long dedup sets, PQ samples) is a `limit(cap+1)
-    // .collect()` over a CONTRACTUALLY BOUNDED side frame — executeTake's
-    // default ramp (1 partition, then ×4 per round) turns each one into
-    // 3-4 scheduler round-trips because the cap is never reached and every
-    // partition gets scanned anyway (measured r19: 4 jobs per centroid
-    // gather on every indexed ANN query/maintenance call). One round over
-    // min(1024, N) partitions collapses each gather to ONE job; the
-    // engine has no selective limit-probe over a huge table that the old
-    // ramp would have served better (semantic top-k queries all carry an
-    // ORDER BY and execute as TakeOrderedAndProject, which this conf does
-    // not touch).
-    spark.conf.set("spark.sql.limit.initialNumPartitions", "1024")
     spark
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Gather
+
 /** Exact-hash deduplication, decontamination and overlap analysis
   * (reference wimbd/text_and_url_overlaps and its helper_scripts — SURVEY
   * §2.4 J1-J6, §2.1 S11, §2.3 A11).
@@ -80,9 +82,9 @@ object Dedup {
   private[graft] val MaxInlineHashes: Int = 1 << 22
 
   /** Gather one long column as a SORTED driver array for broadcast —
-    * sized-gated. One limit-capped collect job when the set is small
+    * sized-gated. One bounded-gather job when the set is small
     * (the common, boilerplate/benchmark-sized case: every extra driver
-    * job here lands on the operator's wall clock); a capped count plus a
+    * job here lands on the operator's wall clock); a bounded count plus a
     * per-partition toLocalIterator stream for big-but-allowed sets (no
     * single all-rows Row buffer); None over `cap`.
     */
@@ -93,19 +95,17 @@ object Dedup {
     // so dropping preserves semantics)
     val df = df0.na.drop()
     val fastCap = math.min(cap, 1 << 22)
-    val fast = df.limit(fastCap + 1).collect()
-    if (fast.length <= fastCap) {
-      val a = fast.map(_.getLong(0)); java.util.Arrays.sort(a); Some(a)
-    } else if (cap <= fastCap) None
-    else {
-      // big-but-maybe-allowed: persist so the sizing count and the
-      // per-partition stream read ONE materialization instead of
-      // re-running the (expensive, by definition) distinct 2-3 times
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        if (p.limit(cap + 1).count() > cap) None
-        else Some(streamSortedLongs(p))
-      } finally p.unpersist(blocking = false)
+    Gather.bounded(df, fastCap) match {
+      case Some(fast) =>
+        val a = fast.map(_.getLong(0)); java.util.Arrays.sort(a); Some(a)
+      case None if cap <= fastCap => None
+      case None =>
+        // big-but-maybe-allowed: persist so the sizing count and the
+        // per-partition stream read ONE materialization instead of
+        // re-running the (expensive, by definition) distinct 2-3 times
+        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try Gather.boundedCount(p, cap).map(_ => streamSortedLongs(p))
+        finally p.unpersist(blocking = false)
     }
   }
 
@@ -442,8 +442,8 @@ object Dedup {
     *        The default 1M edges costs roughly 150 MB of transient Row
     *        objects plus two boxed-key maps of ≤ 2M entries (~250-400 MB
     *        peak) — safe on the 1g spark.driver.memory default with
-    *        headroom; raise it on fat drivers, or set 0 to force the
-    *        distributed path.
+    *        headroom; raise it on fat drivers (below Int.MaxValue), or
+    *        set 0 to force the distributed path.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
                           maxLocalEdges: Long = 1L << 20): DataFrame = {
@@ -464,8 +464,7 @@ object Dedup {
     // on the already-materialized checkpoint (cheap); past the cap (or
     // with the gate disabled) the iterative distributed path below is
     // unchanged. Same posture as keepBestInCluster's broadcast decision.
-    val localCap = math.min(maxLocalEdges, (Int.MaxValue - 1).toLong)
-    if (localCap > 0 && base.limit(localCap.toInt + 1).count() <= localCap) {
+    if (maxLocalEdges > 0 && Gather.boundedCount(base, maxLocalEdges).nonEmpty) {
       val out = localComponents(base)
       org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(base)
       return out
@@ -664,15 +663,11 @@ object Dedup {
     // the membership frame is duplicate-cluster-sized — usually tiny, but
     // crawl corpora reach 30-50% near-dup membership, where a FORCED
     // broadcast would OOM the driver. It is already materialized (CC
-    // checkpoints its labels), so a capped count decides cheaply; beyond
-    // the cap both joins shuffle (and AQE still broadcasts small
-    // runtime sizes).
+    // checkpoints its labels), so a bounded count (cap < Int.MaxValue)
+    // decides cheaply; beyond the cap both joins shuffle (and AQE still
+    // broadcasts small runtime sizes).
     val comp = connectedComponents(pairs)
-    // clamp BEFORE the Int cast: a caller cap above Int.MaxValue would
-    // otherwise wrap negative and throw in limit() instead of simply
-    // taking the shuffle path
-    val cap = math.min(maxBroadcastMembers, (Int.MaxValue - 1).toLong).toInt
-    val small = comp.limit(cap + 1).count() <= maxBroadcastMembers
+    val small = Gather.boundedCount(comp, maxBroadcastMembers).nonEmpty
     def maybeBroadcast(df: DataFrame): DataFrame =
       if (small) broadcast(df) else df
     val members = docs.select(col(idCol).as("__kb_id"), score.as("__kb_score"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
+import graft.Gather
 import graft.functions.expressions.DotProduct
 
 /** Embedding similarity search over an `array<float>` column: brute-force
@@ -523,16 +524,29 @@ object Similarity {
         s"non-integral type ${other.sql} — $hint")
     }
 
+  /** ONE bounded gather of a `(long id, vector)` frame, id-ascending
+    * (the kernels probe with strict `>`, so ties resolve to the LOWEST
+    * centroid id — the oracle's `ORDER BY d DESC, centroid_id`). None
+    * over `cap`: callers fail fast with the dial to turn instead of
+    * OOMing the driver, with no separate sizing job.
+    */
+  private[graft] def gatherIdVectors(df: DataFrame,
+                                     cap: Int): Option[Array[(Long, Array[Double])]] =
+    Gather.bounded(df, cap).map(_.map(r => (r.getLong(0),
+      if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray)).sortBy(_._1))
+
+  /** [[gatherIdVectors]] that fails with `tooMany` over `cap`. */
+  private def requireIdVectors(df: DataFrame, cap: Int,
+                               tooMany: => String): Array[(Long, Array[Double])] = {
+    val got = gatherIdVectors(df, cap)
+    require(got.nonEmpty, tooMany)
+    got.get
+  }
+
   /** The shared centroid-sample gather: integral-id guard (the probe
     * kernels carry centroid ids as longs — fractional ids would truncate
-    * silently; they are what hashedIds exists for), ONE limit-capped
-    * collect that doubles as the too-small-step guard (the driver never
-    * receives more than cap+1 rows — a miscalibrated step fails fast with
-    * the dial to turn instead of OOMing mid-collect, and no separate
-    * sizing job lands on the operator's wall clock), ascending-id sort
-    * (the kernels probe with strict `>`, so ties resolve to the LOWEST
-    * centroid id — max_by(struct(csim, -cid)) ordering, the oracle's
-    * `ORDER BY d DESC, centroid_id`), and the loud zero-centroids check
+    * silently; they are what hashedIds exists for), [[gatherIdVectors]]
+    * doubling as the too-small-step guard, and the loud zero-centroids check
     * (a silent drop-everything otherwise — the hashedIds filter is
     * probabilistic ~1/step, so small corpora hit it routinely; an empty
     * corpus degrades to empty).
@@ -547,13 +561,9 @@ object Similarity {
       if (!hashedIds) col(idCol).cast("long")
       else xxhash64(col(idCol).cast("string"))
     val centCap = 1 << 16
-    val rows = sample.select(centKey.as("cid"), col("bv"))
-      .limit(centCap + 1).collect()
-    require(rows.length <= centCap,
+    val cents = requireIdVectors(sample.select(centKey, col("bv")), centCap,
       s"$op: step=$step yields more than $centCap sampled centroids " +
         "on this corpus — raise step (or the cap)")
-    val cents = rows
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
     if (cents.isEmpty && !b.isEmpty) sys.error(
       s"$op: step=$step selected ZERO centroids on this corpus — " +
         "lower step" + (if (hashedIds) " (the hashedIds filter is " +
@@ -718,7 +728,7 @@ object Similarity {
         col("__best").getField("bucket").as("bucket") +: keep.map(col): _*)
 
   /** Gather an index-sized `(centroid_id, cv)` FRAME (cap-guarded, one
-    * limit-capped collect) and assign `b`'s unit vectors via the gated
+    * bounded gather) and assign `b`'s unit vectors via the gated
     * kernel — the shared shape for every caller holding centroids as a
     * DataFrame ([[ivfKnnWith]], the [[graft.search.AnnIndex]] build and
     * append paths). One codegen scan projection, zero shuffle — replaces
@@ -737,7 +747,7 @@ object Similarity {
 
   /** [[assignWithCentroidFrame]] for callers that already hold the
     * gathered (ascending-id-sorted, non-null) centroid array — the
-    * build-side fast path shares ONE capped collect between this
+    * build-side fast path shares ONE bounded gather between this
     * kernel broadcast, the `__centroids` side-table write and the
     * `ncents` metadata instead of paying a collect job per consumer
     * (r18 job-count optimization; at corpus scale each removed job was
@@ -763,7 +773,7 @@ object Similarity {
   private[graft] val MaxGatheredCentroidsConf = "graft.ann.maxGatheredCentroids"
   private[graft] val MaxGatheredCentroidsDefault: Int = 1 << 16
 
-  /** ONE limit-capped driver gather of an index-sized `(centroid_id, cv)`
+  /** ONE bounded driver gather of an index-sized `(centroid_id, cv)`
     * frame for the probe/assignment kernels: null-cv rows dropped (no
     * direction — never comparable), ascending-id sort (the kernels'
     * tie-break contract), loud failure over the cap.
@@ -776,19 +786,14 @@ object Similarity {
         "rows) — it must be index-sized (broadcast to every probe)"))
 
   /** [[gatherCentroidFrame]] that returns None over the cap instead of
-    * throwing — ONE limit-capped collect job either way.
+    * throwing — ONE bounded-gather job either way.
     */
   private[graft] def gatherCentroidFrameOpt(
       centroids: DataFrame): Option[Array[(Long, Array[Double])]] = {
     val cap = intConf(centroids.sparkSession, MaxGatheredCentroidsConf,
       MaxGatheredCentroidsDefault)
-    val centRows = centroids
-      .select(col("centroid_id").cast("long").as("cid"), col("cv"))
-      .where(col("cv").isNotNull)
-      .limit(cap + 1).collect()
-    if (centRows.length > cap) None
-    else Some(
-      centRows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1))
+    gatherIdVectors(centroids.select(col("centroid_id").cast("long"), col("cv"))
+      .where(col("cv").isNotNull), cap)
   }
 
   /** Query-side IVF probe selection as ONE codegen scan projection
@@ -922,8 +927,8 @@ object Similarity {
     */
   /** The caller-capped centroid-sample gather [[clusterProfile]] and
     * [[kmeansCentroids]] share: integral-id guard, null-unit seeds
-    * dropped, ONE limit-capped collect doubling as the too-small-step
-    * guard (the ivfAssign pattern), ascending-id sort. Empty-sample
+    * dropped, [[gatherIdVectors]] doubling as the too-small-step
+    * guard (the ivfAssign pattern). Empty-sample
     * handling stays with the caller (clusterProfile degrades to an empty
     * profile; kmeansCentroids errors loudly).
     */
@@ -934,13 +939,10 @@ object Similarity {
     requireIntegralId(base, idCol, op,
       "hash ids to a long upstream (the hashedIds/xxhash64 pattern) — " +
         "a fractional id would truncate into a colliding centroid bucket")
-    val rows = b.where(col(idCol) % step === 0 && col("bv").isNotNull)
-      .select(col(idCol).cast("long"), col("bv"))
-      .limit(maxCentroids + 1).collect()
-    require(rows.length <= maxCentroids,
+    requireIdVectors(b.where(col(idCol) % step === 0 && col("bv").isNotNull)
+      .select(col(idCol).cast("long"), col("bv")), maxCentroids,
       s"$op: step=$step yields more than $maxCentroids sampled " +
         "centroids on this corpus — raise step (or maxCentroids)")
-    rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
   }
 
   def clusterProfile(base: DataFrame, idCol: String, vecCol: String,
@@ -1035,7 +1037,7 @@ object Similarity {
         "shape) — hash non-numeric ids to a long upstream")
     val b = unitProject(base, idCol, idCol, vecCol, "bv")
     // the centroid table is index-sized by contract — gather it ONCE
-    // (limit-capped) and run BOTH the corpus assignment and the query
+    // (bounded) and run BOTH the corpus assignment and the query
     // probe selection off the same driver array via the kernels: two
     // scan projections, no corpus re-grouping shuffle (the former join +
     // groupBy(id) shape) and no Q×C probe window shuffle
@@ -1203,20 +1205,17 @@ object Similarity {
                                step: Int,
                                maxSample: Int): Array[Array[Array[Double]]] = {
     // K = n/step rows land on the driver AND are re-inlined as a plan
-    // literal by pqEncode — collect through a limit so a step miscalibrated
+    // literal by pqEncode — a bounded gather, so a step miscalibrated
     // for the corpus size fails fast instead of OOMing the driver
-    val rows = sampled.select(col(idCol).cast("long"), col("bv"))
-      .limit(maxSample + 1).collect()
-    // requires/sort/slicing all live in codebookFromRows — ONE copy of
-    // the derivation whichever side of the collect the caller is on
-    codebookFromRows(rows.map(r => (r.getLong(0),
-      if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray)),
-      m, step, maxSample)
+    // slicing lives in codebookFromRows — ONE copy of the derivation
+    // whichever side of the gather the caller is on
+    codebookFromRows(requireIdVectors(sampled.select(col(idCol).cast("long"),
+      col("bv")), maxSample, sampleCapMsg(step, maxSample)), m, step, maxSample)
   }
 
   /** [[codebookFromUnit]] over `(id, unit-vector)` rows ALREADY gathered
     * to the driver — the PQ build's fast path shares the centroid
-    * selection's one capped collect when `codeStep == step` (the sampled
+    * selection's one bounded gather when `codeStep == step` (the sampled
     * rows are the same set), replacing the separate codebook-sample
     * collect job (a corpus scan at 100 TB). Same requires, same
     * ascending-id sort, same subspace slicing — bit-identical output to
@@ -1225,9 +1224,7 @@ object Similarity {
   private[graft] def codebookFromRows(rows: Array[(Long, Array[Double])],
                                       m: Int, step: Int,
                                       maxSample: Int): Array[Array[Array[Double]]] = {
-    require(rows.length <= maxSample,
-      s"pqCodebook: step=$step yields more than $maxSample codebook rows " +
-        s"on this corpus — raise step (or maxSample)")
+    require(rows.length <= maxSample, sampleCapMsg(step, maxSample))
     val sample = rows.sortBy(_._1).map(_._2)
     require(sample.nonEmpty, "empty codebook sample — lower step")
     val dim = sample.head.length
@@ -1235,6 +1232,10 @@ object Similarity {
     val sub = dim / m
     Array.tabulate(m)(j => sample.map(v => v.slice(j * sub, (j + 1) * sub)))
   }
+
+  private def sampleCapMsg(step: Int, maxSample: Int): String =
+    s"pqCodebook: step=$step yields more than $maxSample codebook rows " +
+      s"on this corpus — raise step (or maxSample)"
 
   /** k-means-refined PQ codebook (the FAISS training default, vs
     * [[pqCodebook]]'s raw deterministic sample): per subspace, `iters`
@@ -1251,14 +1252,11 @@ object Similarity {
   def pqCodebookKmeans(base: DataFrame, idCol: String, vecCol: String,
                        m: Int, k: Int, step: Int, iters: Int = 5,
                        maxSample: Int = 8192): Array[Array[Array[Double]]] = {
-    val rows = unitProject(base.where(col(idCol) % step === 0), idCol, idCol,
-        vecCol, "bv")
-      .select(col(idCol).cast("long"), col("bv"))
-      .limit(maxSample + 1).collect()
-    require(rows.length <= maxSample,
+    val sample = requireIdVectors(
+      unitProject(base.where(col(idCol) % step === 0), idCol, idCol,
+        vecCol, "bv").select(col(idCol).cast("long"), col("bv")), maxSample,
       s"pqCodebookKmeans: step=$step yields more than $maxSample sample " +
-        s"rows on this corpus — raise step (or maxSample)")
-    val sample = rows.sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
+        s"rows on this corpus — raise step (or maxSample)").map(_._2)
     require(sample.length >= k,
       s"pqCodebookKmeans: k=$k exceeds the ${sample.length}-row sample — lower step")
     val dim = sample.head.length

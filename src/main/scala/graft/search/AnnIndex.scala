@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Gather
 import graft.operators.Similarity
 
 /** The embedding tier's "build once, query many" rung — a persisted IVF
@@ -84,6 +85,32 @@ object AnnIndex {
       .partitionBy(PartCol).bucketBy(buckets, "bucket").sortBy("bucket")
       .saveAsTable(table)
 
+  /** The builds' ONE bounded gather of the centroid selection
+    * `(centroid_id, cv)`: every row, null-cv rows included (they stay in
+    * `__centroids`, which lists the full sample). When the rows exceed
+    * the gather cap the non-null rows alone may still fit (the kernel
+    * array drops null-cv rows anyway), so the gather retries over those
+    * and flags the result `distributed`: the full null-bearing sample is
+    * then unknown and `__centroids` is written from the frame. Returns
+    * the rows, the kernel array (non-null rows, id-sorted) and the flag.
+    */
+  private def gatherSelection(selection: DataFrame, step: Int, op: String)
+      : (Array[org.apache.spark.sql.Row], Array[(Long, Array[Double])], Boolean) = {
+    val cap = math.max(1, Similarity.intConf(selection.sparkSession,
+      Similarity.MaxGatheredCentroidsConf,
+      Similarity.MaxGatheredCentroidsDefault))
+    val got = Gather.bounded(selection, cap).map((_, false)).orElse(
+      Gather.bounded(selection.where(col("cv").isNotNull), cap).map((_, true)))
+    require(got.nonEmpty,
+      s"$op: step=$step yields more than $cap sampled centroids on this " +
+        s"corpus — raise step (or the ${Similarity.MaxGatheredCentroidsConf} " +
+        "dial); centroids must be index-sized (broadcast to every probe)")
+    val (rows, distributed) = got.get
+    (rows, rows.filter(!_.isNullAt(1))
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1),
+      distributed)
+  }
+
   /** Assign unit vectors to their argmax-cosine centroid (tie → lower
     * centroid id) — the ONE copy of the assignment the build and append
     * paths share, same arithmetic as [[Similarity.ivfAssign]]: the
@@ -107,16 +134,7 @@ object AnnIndex {
                              queries: DataFrame, idCol: String,
                              vecCol: String, nprobe: Int): DataFrame =
     probeRowsOf(spark, table, queries, idCol, vecCol, nprobe,
-      metaDimOf(spark, table))._1
-
-  /** The one-row `__meta` dimension, if the completion record exists —
-    * read ONCE per query call and threaded down (the dim validation and
-    * the PQ residual flag each paid their own one-row head() job before).
-    */
-  private def metaDimOf(spark: SparkSession, table: String): Option[Int] =
-    if (spark.catalog.tableExists(s"${table}__meta"))
-      Some(spark.table(s"${table}__meta").head().getAs[Int]("dim"))
-    else None
+      metaRowOf(spark, table).map(_.getAs[Int]("dim")))._1
 
   /** One collected probe pass returning the LocalRelation probe frame
     * AND its driver rows plus the distinct asked query ids. The kernel
@@ -166,18 +184,8 @@ object AnnIndex {
         (spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
           rows, Some(asked), Some(cents.length.toLong))
       case None =>
-        metaDim.orElse(metaDimOf(spark, table)).foreach { dim =>
-          // EVERY row checked (query frames are small by contract): a
-          // single mismatched or null vector would dot to null and
-          // silently return arbitrary/empty neighbors for that query
-          val bad = queries
-            .where(col(vecCol).isNull || size(col(vecCol)) =!= dim)
-            .limit(1).count()
-          require(bad == 0,
-            s"query frame contains a null or non-$dim-dimensional " +
-              s"embedding (table $table was built over $dim-dimensional " +
-              "vectors)")
-        }
+        metaDim.orElse(metaRowOf(spark, table).map(_.getAs[Int]("dim")))
+          .foreach(requireDim(queries, vecCol, _, table, "query frame"))
         val q = Similarity.unitProject(queries, idCol, "query_id", vecCol,
           "qv")
         val wq = Window.partitionBy("query_id")
@@ -197,20 +205,44 @@ object AnnIndex {
     }
   }
 
+  /** Every vector in `frame` is non-null and `dim`-dimensional. EVERY
+    * row is checked (query frames and ingest batches are bounded by
+    * contract, and the check is one job): a single bad vector would dot
+    * to null and silently return arbitrary neighbors, or land in an
+    * arbitrary bucket. `what` names the frame in the error.
+    */
+  private def requireDim(frame: DataFrame, vecCol: String, dim: Int,
+                         table: String, what: String): Unit =
+    require(Gather.bounded(
+        frame.where(col(vecCol).isNull || size(col(vecCol)) =!= dim), 0).nonEmpty,
+      s"$what contains a null or non-$dim-dimensional embedding " +
+        s"(table $table was built over $dim-dimensional vectors)")
+
   /** The index table pruned to the probed buckets: the bucket ids reach
     * the scan as a LITERAL `IN` (a join key can't prune file buckets);
-    * the list is bounded by |queries| × nprobe by construction.
+    * the list is bounded by |queries| × nprobe by construction. The same
+    * literal list prunes PARTITION directories (the probed lists are the
+    * only paths listed/read).
     */
   private def prunedIndex(spark: SparkSession, table: String,
                           probeBuckets: Array[Long]): DataFrame = {
-    val idx = spark.table(table).where(col("bucket").isin(probeBuckets: _*))
-    // per-list layout: the same literal list prunes PARTITION directories
-    // (the probed lists are the only paths listed/read); legacy bucketed-
-    // only tables skip the clause and keep their file-bucket pruning
-    if (idx.columns.contains(PartCol))
-      idx.where(col(PartCol).isin(probeBuckets: _*))
-    else idx
+    val idx = spark.table(table)
+    requirePerList(idx.columns, table)
+    idx.where(col("bucket").isin(probeBuckets: _*) &&
+      col(PartCol).isin(probeBuckets: _*))
   }
+
+  /** The one persisted layout is per-list ([[PartCol]] partitions, see
+    * [[writeIndexRows]]). A table without the partition column predates
+    * it; it is rejected with the rebuild command instead of being read
+    * or maintained down a second code path.
+    */
+  private def requirePerList(columns: Seq[String], table: String): Unit =
+    require(columns.contains(PartCol),
+      s"$table has no $PartCol column: it is a legacy bucketed-only ANN " +
+        "index, which is no longer read or maintained — rebuild it with " +
+        "writeIvfIndex/writeIvfPqIndex(force = true) (CLI: ann PATH... " +
+        s"--table $table --force)")
 
   /** Per-query top-k over (query_id, id, cos) candidates — self-match
     * excluded upstream; ties break neighbor-id-ascending, cos round(4)
@@ -228,9 +260,9 @@ object AnnIndex {
     * the number [[widenStarved]]'s exhaustive-vs-probed decision reads
     * per query; recording it here removes a per-call count() over the
     * side table. `plist` = the per-list partitioned layout RECORD for
-    * external readers/debugging — layout dispatch itself reads the
-    * table schema's [[PartCol]] column (the table is the source of
-    * truth; a hand-edited flag cannot contradict it). `resid` = the PQ
+    * external readers/debugging — the layout check ([[requirePerList]])
+    * reads the table schema's [[PartCol]] column (the table is the source
+    * of truth; a hand-edited flag cannot contradict it). `resid` = the PQ
     * tier's residual-encoding flag ([[writeIvfPqIndex]]) — the query and
     * append paths branch on it.
     */
@@ -245,15 +277,6 @@ object AnnIndex {
       .write.mode(SaveMode.Overwrite).format("parquet")
       .saveAsTable(s"${table}__meta")
   }
-
-  /** The PQ tier's residual-encoding flag off `__meta` (false for plain
-    * tiers and pre-resid metas). Query/maintenance paths read the flag
-    * from their one threaded meta row instead; this wrapper serves
-    * external probes.
-    */
-  private[graft] def isResidual(spark: SparkSession, table: String): Boolean =
-    metaRowOf(spark, table).exists(r =>
-      r.schema.fieldNames.contains("resid") && r.getAs[Boolean]("resid"))
 
   /** Non-null centroid count of a saved index — from `__meta`'s `ncents`
     * (one one-row read) when present; pre-ncents indices fall back to
@@ -390,37 +413,14 @@ object AnnIndex {
         b.where(pmod(xxhash64(col("id").cast("string")), lit(step.toLong)) === 0)
           .select(xxhash64(col("id").cast("string")).as("centroid_id"),
             col("bv").as("cv"))
-    // ONE capped collect of the (index-sized by contract) selection scan
-    // replaces the former localCheckpoint materialization + limit(1)
-    // probe + assignment-side re-gather + two post-write count() jobs:
-    // the driver rows serve the kernel broadcast, the `__centroids`
-    // write, the balance guard's centroid count and `__meta`'s ncents.
-    // Null-cv rows (zero/null vectors) STAY in `__centroids` (the side
-    // table lists the full sample; every reader drops them) but are
-    // excluded from the kernel array, exactly like the former gather.
-    val cap = math.max(1, Similarity.intConf(spark,
-      Similarity.MaxGatheredCentroidsConf,
-      Similarity.MaxGatheredCentroidsDefault))
-    var selRows = selection.limit(cap + 1).collect()
-    // a truncated all-rows collect might still fit after the null drop —
-    // retry non-null-only (the exact cap semantics of the former
-    // assignment-side gather); `__centroids` then falls back to a
-    // distributed write because the full null-bearing sample is unknown
-    var centsDistributed = false
-    if (selRows.length > cap) {
-      selRows = selection.where(col("cv").isNotNull).limit(cap + 1).collect()
-      if (selRows.length > cap) sys.error(
-        "writeIvfIndex: centroid selection exceeds the gather cap " +
-          s"(${Similarity.MaxGatheredCentroidsConf}, default " +
-          s"${Similarity.MaxGatheredCentroidsDefault} rows) — it must be " +
-          "index-sized (broadcast to every probe)")
-      centsDistributed = true
-    }
+    // ONE bounded gather of the (index-sized by contract) selection: the
+    // driver rows serve the kernel broadcast, the `__centroids` write,
+    // the balance guard's centroid count and `__meta`'s ncents.
+    val (selRows, centArr, centsDistributed) =
+      gatherSelection(selection, step, "writeIvfIndex")
     require(selRows.nonEmpty,
       s"writeIvfIndex: step=$step selected ZERO centroids on this corpus " +
         "— lower step (the hashedIds filter is probabilistic: ~1/step)")
-    val centArr = selRows.filter(!_.isNullAt(1))
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
     require(centArr.nonEmpty,
       s"writeIvfIndex: step=$step selected only zero/null-direction " +
         "centroid rows on this corpus — lower step")
@@ -605,29 +605,13 @@ object AnnIndex {
     val b = Similarity.unitProjectKeep(base, idCol, idCol, vecCol, "bv", keep)
     val selection = b.where(col(idCol) % step === 0)
       .select(col(idCol).cast("long").as("centroid_id"), col("bv").as("cv"))
-    // ONE capped collect of the centroid selection, exactly as in
+    // ONE bounded gather of the centroid selection, exactly as in
     // [[writeIvfIndex]]: it serves the assignment kernel, the
     // `__centroids` write, the balance guard's count, `__meta`'s ncents
     // AND — when `codeStep == step`, the driver queries' configuration —
-    // the PQ codebook sample (the id-mod-codeStep rows are the SAME
-    // set), replacing the former whole-corpus `.cache()` + separate
-    // codebook-sample collect with two plain scans and zero cache.
-    val centCap = math.max(1, Similarity.intConf(spark,
-      Similarity.MaxGatheredCentroidsConf,
-      Similarity.MaxGatheredCentroidsDefault))
-    var selRows = selection.limit(centCap + 1).collect()
-    var centsDistributed = false
-    if (selRows.length > centCap) {
-      selRows = selection.where(col("cv").isNotNull)
-        .limit(centCap + 1).collect()
-      require(selRows.length <= centCap,
-        s"writeIvfPqIndex: step=$step yields more than $centCap sampled " +
-          s"centroids on this corpus — raise step (or the " +
-          s"${Similarity.MaxGatheredCentroidsConf} dial)")
-      centsDistributed = true
-    }
-    val centArr = selRows.filter(!_.isNullAt(1))
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+    // the PQ codebook sample (the id-mod-codeStep rows are the SAME set).
+    val (selRows, centArr, centsDistributed) =
+      gatherSelection(selection, step, "writeIvfPqIndex")
     if (centArr.isEmpty && (selRows.nonEmpty || !b.isEmpty)) sys.error(
       s"writeIvfPqIndex: step=$step selected ZERO centroids on this " +
         "corpus — lower step")
@@ -831,38 +815,36 @@ object AnnIndex {
       }
     registerPlain(s"${table}__meta")
     val buckets = spark.table(s"${table}__meta").head().getAs[Int]("buckets")
-    if (!spark.catalog.tableExists(table)) {
-      val inferred = spark.read.parquet(loc(table)).schema
-      if (inferred.fieldNames.contains(PartCol)) {
-        // per-list layout: the partition column's type must be pinned to
-        // BIGINT explicitly — directory-name inference types small values
-        // INT, and an INT pbucket under LONG probe literals would wrap
-        // every partition filter in a Cast (and unionByName maintenance
-        // frames in a coercion)
-        val schema = org.apache.spark.sql.types.StructType(
-          inferred.filterNot(_.name == PartCol) :+
-            org.apache.spark.sql.types.StructField(PartCol,
-              org.apache.spark.sql.types.LongType)).toDDL
-        spark.sql(s"CREATE TABLE `$table` ($schema) USING parquet " +
-          s"PARTITIONED BY ($PartCol) " +
-          s"CLUSTERED BY (bucket) SORTED BY (bucket) INTO $buckets BUCKETS " +
-          s"LOCATION '${loc(table)}'")
-        // a freshly created partitioned catalog table has NO partition
-        // entries — without recovery every read returns empty
-        spark.catalog.recoverPartitions(table)
-      } else {
-        val schema = inferred.toDDL
-        spark.sql(s"CREATE TABLE `$table` ($schema) USING parquet " +
-          s"CLUSTERED BY (bucket) SORTED BY (bucket) INTO $buckets BUCKETS " +
-          s"LOCATION '${loc(table)}'")
-      }
-    }
+    if (!spark.catalog.tableExists(table))
+      registerPerList(spark, table, loc(table),
+        spark.read.parquet(loc(table)).schema, buckets)
     registerPlain(s"${table}__centroids")
     val cb = s"${table}__codebook"
     if (new org.apache.hadoop.fs.Path(loc(cb))
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
         .exists(new org.apache.hadoop.fs.Path(loc(cb))))
       registerPlain(cb)
+  }
+
+  /** Catalog entry for a per-list index directory of parquet schema
+    * `inferred`, [[PartCol]] pinned to BIGINT (inferred INT under LONG
+    * probe literals would wrap every partition filter in a Cast) and its
+    * partitions recovered from the tree (a new entry has none: every
+    * read would return empty).
+    */
+  private def registerPerList(spark: SparkSession, name: String, loc: String,
+                              inferred: org.apache.spark.sql.types.StructType,
+                              buckets: Int): Unit = {
+    requirePerList(inferred.fieldNames.toSeq, name)
+    val schema = org.apache.spark.sql.types.StructType(
+      inferred.filterNot(_.name == PartCol) :+
+        org.apache.spark.sql.types.StructField(PartCol,
+          org.apache.spark.sql.types.LongType)).toDDL
+    spark.sql(s"CREATE TABLE `$name` ($schema) USING parquet " +
+      s"PARTITIONED BY ($PartCol) " +
+      s"CLUSTERED BY (bucket) SORTED BY (bucket) INTO $buckets BUCKETS " +
+      s"LOCATION '$loc'")
+    spark.catalog.recoverPartitions(name)
   }
 
   // ---- maintenance ----
@@ -951,17 +933,8 @@ object AnnIndex {
                                 vecCol: String,
                                 meta: Option[org.apache.spark.sql.Row])
       : DataFrame = {
-    meta.map(_.getAs[Int]("dim")).foreach { dim =>
-      // EVERY row checked (ingest batches are bounded by contract): a
-      // single mismatched or null vector would dot to null and silently
-      // land in an arbitrary bucket
-      val bad = vectors
-        .where(col(vecCol).isNull || size(col(vecCol)) =!= dim)
-        .limit(1).count()
-      require(bad == 0,
-        s"query frame contains a null or non-$dim-dimensional embedding " +
-          s"(table $table was built over $dim-dimensional vectors)")
-    }
+    meta.map(_.getAs[Int]("dim")).foreach(dim =>
+      requireDim(vectors, vecCol, dim, table, "ingest batch"))
     // keep columns come from the index's own schema, so appends ALWAYS
     // match the live table — keep-bearing indexes upsert/compact like
     // bare ones, and the incoming frame must simply carry the columns
@@ -1049,16 +1022,7 @@ object AnnIndex {
               java.util.Arrays.asList(rows: _*), schema))
           }
         (batch: DataFrame) => {
-          dim.foreach { d =>
-            // EVERY row checked, exactly as assignNew (batch-sized scan)
-            val bad = batch
-              .where(col(vecCol).isNull || size(col(vecCol)) =!= d)
-              .limit(1).count()
-            require(bad == 0,
-              s"query frame contains a null or non-$d-dimensional " +
-                s"embedding (table $table was built over $d-dimensional " +
-                "vectors)")
-          }
+          dim.foreach(d => requireDim(batch, vecCol, d, table, "ingest batch"))
           // same output order as [[assignUnit]] — (id, bucket, bv, keep…)
           val assigned = Similarity.assignWithCentroidArray(
               Similarity.unitProjectKeep(batch, idCol, "id", vecCol, "bv",
@@ -1205,8 +1169,7 @@ object AnnIndex {
     * ([[finishPartitionSwap]]). Maintenance cost therefore scales with
     * the batch's bucket footprint, not the table: absorbing 2k arrivals
     * into 1e9 rows rewrites the 2k arrivals' lists. The centroid side
-    * table is untouched (appends were assigned against it). Legacy
-    * (pre-per-list) tables keep the old whole-table swap.
+    * table is untouched (appends were assigned against it).
     *
     * Crash contract: the live TABLE never moves. Renames begin only
     * after the staging write commits, so any crash before that leaves
@@ -1233,15 +1196,7 @@ object AnnIndex {
     require(buckets == -1 || buckets == metaBuckets,
       s"compactIvfIndex: buckets=$buckets but $table was built with " +
         s"$metaBuckets (recorded in ${table}__meta) — omit the parameter")
-    if (!spark.table(table).columns.contains(PartCol)) {
-      // legacy bucketed-only layout: whole-table rename-aside swap
-      InvertedIndex.swapTable(spark, table)((live, staging) =>
-        live.unionByName(appends)
-          .write.mode(SaveMode.ErrorIfExists).format("parquet")
-          .bucketBy(metaBuckets, "bucket").sortBy("bucket")
-          .saveAsTable(staging))
-      return
-    }
+    requirePerList(spark.table(table).columns, table)
     recoverPartitionSwap(spark, table) // heal any prior half-swap first
     // checkpoint: the appends frame feeds both the touched-list collect
     // and the staging write (batch-sized by contract)
@@ -1289,22 +1244,13 @@ object AnnIndex {
     require(meta.nonEmpty,
       s"upsertIvfIndex: ${table}__meta is missing — $table is not a " +
         "completed IVF index (build it with writeIvfIndex/writeIvfPqIndex)")
+    requirePerList(spark.table(table).columns, table)
     val buckets = meta.get.getAs[Int]("buckets")
     val appends = assignNewWithMeta(spark, table, vectors, idCol, vecCol,
         meta)
       .localCheckpoint(eager = true)
     try {
       val incoming = appends.select(col("id")).distinct()
-      if (!spark.table(table).columns.contains(PartCol)) {
-        // legacy layout: whole-table swap
-        InvertedIndex.swapTable(spark, table)((live, staging) =>
-          live.join(broadcast(incoming), Seq("id"), "left_anti")
-            .unionByName(appends)
-            .write.mode(SaveMode.ErrorIfExists).format("parquet")
-            .bucketBy(buckets, "bucket").sortBy("bucket")
-            .saveAsTable(staging))
-        return
-      }
       recoverPartitionSwap(spark, table)
       val appendsP = appends.withColumn(PartCol, col("bucket"))
       val live = spark.table(table)
@@ -1484,42 +1430,22 @@ object AnnIndex {
     // registerIvfIndex throws at the (absent) live-table read BEFORE
     // reaching the later side tables, so register each side table
     // independently — the heal below needs __centroids regardless of the
-    // main table's state (a half-written dir has no footers, hence Try)
-    def registerPlain(name: String): Unit =
-      if (!spark.catalog.tableExists(name) && dirExists(name))
-        scala.util.Try {
-          val schema = spark.read.parquet(loc(name).toString).schema.toDDL
-          spark.sql(s"CREATE TABLE `$name` ($schema) USING parquet " +
-            s"LOCATION '${loc(name)}'")
-        }
+    // main table's state. A half-written dir has no footers, hence Try:
+    // it stays unregistered (a readable legacy-layout dir fails loudly
+    // in registerPerList).
+    def schemaOf(name: String) =
+      if (spark.catalog.tableExists(name) || !dirExists(name)) None
+      else scala.util.Try(spark.read.parquet(loc(name).toString).schema).toOption
+    def registerPlain(name: String): Unit = schemaOf(name).foreach(s =>
+      spark.sql(s"CREATE TABLE `$name` (${s.toDDL}) USING parquet " +
+        s"LOCATION '${loc(name)}'"))
     registerPlain(s"${table}__meta")
     if (!spark.catalog.tableExists(s"${table}__meta")) return false
     registerPlain(s"${table}__centroids")
     registerPlain(s"${table}__codebook")
     val buckets = spark.table(s"${table}__meta").head().getAs[Int]("buckets")
-    def registerBucketed(name: String): Unit =
-      if (!spark.catalog.tableExists(name) && dirExists(name))
-        scala.util.Try {
-          val inferred = spark.read.parquet(loc(name).toString).schema
-          if (inferred.fieldNames.contains(PartCol)) {
-            // per-list layout: same pinned-BIGINT partition DDL as
-            // [[registerIvfIndex]], partitions recovered from the tree
-            val schema = org.apache.spark.sql.types.StructType(
-              inferred.filterNot(_.name == PartCol) :+
-                org.apache.spark.sql.types.StructField(PartCol,
-                  org.apache.spark.sql.types.LongType)).toDDL
-            spark.sql(s"CREATE TABLE `$name` ($schema) USING parquet " +
-              s"PARTITIONED BY ($PartCol) " +
-              s"CLUSTERED BY (bucket) SORTED BY (bucket) " +
-              s"INTO $buckets BUCKETS LOCATION '${loc(name)}'")
-            spark.catalog.recoverPartitions(name)
-          } else {
-            val schema = inferred.toDDL
-            spark.sql(s"CREATE TABLE `$name` ($schema) USING parquet " +
-              s"CLUSTERED BY (bucket) SORTED BY (bucket) " +
-              s"INTO $buckets BUCKETS LOCATION '${loc(name)}'")
-          }
-        }
+    def registerBucketed(name: String): Unit = schemaOf(name)
+      .foreach(registerPerList(spark, name, loc(name).toString, _, buckets))
     registerBucketed(table)
     if (!spark.catalog.tableExists(table)) {
       registerBucketed(table + "__old")
@@ -1539,12 +1465,10 @@ object AnnIndex {
     if (!spark.catalog.tableExists(table) && dirExists(table) &&
         !isComplete(table))
       loc(table).getFileSystem(hconf).delete(loc(table), true)
-    // bucket-local fold debris (per-list layout): the live table exists
-    // throughout that protocol, so its heal runs AFTER registration —
-    // roll a complete staging forward, an incomplete one back
-    if (spark.catalog.tableExists(table) &&
-        spark.table(table).columns.contains(PartCol))
-      recoverPartitionSwap(spark, table)
+    // bucket-local fold debris: the live table exists throughout that
+    // protocol, so its heal runs AFTER registration — roll a complete
+    // staging forward, an incomplete one back
+    if (spark.catalog.tableExists(table)) recoverPartitionSwap(spark, table)
     spark.catalog.tableExists(table)
   }
 

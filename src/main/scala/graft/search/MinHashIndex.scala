@@ -3,6 +3,7 @@ package graft.search
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Gather
 import graft.operators.MinHash
 
 /** Persisted MinHash band-row index — "sign once, decontaminate many".
@@ -146,16 +147,13 @@ object MinHashIndex {
                                   table: String, bench: DataFrame,
                                   benchId: String, benchText: String,
                                   maxPruneKeys: Int = 10000): DataFrame = {
-    // computed once, feeds BOTH the prune collect and the join
+    // computed once, feeds BOTH the prune gather and the join
     val rowsB = bandRowsWith(p, bench, benchId, benchText)
       .select(col("id").as("__idb"), col("band"), col("band_key"))
       .localCheckpoint(true)
-    val keys = rowsB.select("band_key").distinct()
-      .limit(maxPruneKeys + 1).collect().map(_.getString(0))
-    val idx =
-      if (keys.length <= maxPruneKeys)
-        spark.table(table).where(col("band_key").isin(keys.toIndexedSeq: _*))
-      else spark.table(table)
+    val idx = Gather.bounded(rowsB.select("band_key").distinct(), maxPruneKeys)
+      .fold(spark.table(table))(keys => spark.table(table)
+        .where(col("band_key").isin(keys.map(_.getString(0)).toIndexedSeq: _*)))
     idx.join(broadcast(rowsB), Seq("band", "band_key"))
       .select(col("id").as("id_a"), col("__idb").as("id_b")).distinct()
   }

@@ -3,6 +3,8 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Gather
+
 /** PromptSource-style template client (§2.9). The reference's parser
   * (wimbd/contamination/promptsource_parse.py:10-53) walks promptsource's
   * templates.yaml tree, keeps each dataset's FIRST template, extracts its
@@ -86,7 +88,7 @@ object PromptTemplates {
     *
     * Templates sharing one benchmark frame (the promptsource shape: many
     * templates per dataset) render as sibling columns of ONE projection
-    * and gather in ONE limit-capped collect job — a benchmark frame that
+    * and gather in ONE bounded-gather job — a benchmark frame that
     * is itself a derived view (filters, joins, another corpus) is scanned
     * once per FRAME, not once per template. Prompt order within a frame
     * follows template order, so the phrase list is identical to the
@@ -124,12 +126,14 @@ object PromptTemplates {
     val phrases = frames.iterator.flatMap { case (df, ts) =>
       val cols = ts.zipWithIndex.map { case (t, i) =>
         renderColumn(t.template).as(s"__p$i") }
-      val rows = df.select(cols.toSeq: _*).limit(budget / ts.length + 1).collect()
-      require(rows.length.toLong * ts.length <= budget,
+      val cap = budget / ts.length
+      val gathered = Gather.bounded(df.select(cols.toSeq: _*), cap)
+      require(gathered.nonEmpty,
         s"contaminationFromTemplates: rendered prompts exceed the remaining " +
           s"broadcast budget ($maxPrompts total) — benchmark frames " +
-          s"must stay benchmark-sized; got >${rows.length - 1} rows x " +
+          s"must stay benchmark-sized; got >$cap rows x " +
           s"${ts.length} template(s) for ${ts.map(_.name).mkString(", ")}")
+      val rows = gathered.get
       budget -= rows.length * ts.length
       ts.zipWithIndex.flatMap { case (t, i) =>
         rows.iterator.map(r => (t.name, foldPhrase(r.getString(i))))

@@ -1250,4 +1250,60 @@ class AnnIndexSpec extends SparkTestBase {
     } finally (side(plain) ++ side(pq) ++ side(resid)).grouped(4).foreach(g =>
       graft.queries.Tables.reset(spark, g: _*))
   }
+
+  test("upsert with a wrong-dim vector fails naming the ingest batch") {
+    val table = "annidx_upsert_dim"
+    val side = Seq(table, s"${table}__centroids", s"${table}__meta",
+      s"${table}__compacting", s"${table}__old")
+    graft.queries.Tables.reset(spark, side: _*)
+    AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 50,
+      table = table, buckets = 4, force = true)
+    try {
+      val batch = emb.where(col("vec_id") % 97 === 3)
+      val bad = batch.withColumn("embedding",
+        when(col("vec_id") === 3, slice(col("embedding"), 1, 3))
+          .otherwise(col("embedding")))
+      val e = intercept[IllegalArgumentException] {
+        AnnIndex.upsertIvfIndex(spark, table, bad, "vec_id", "embedding")
+      }
+      assert(e.getMessage.contains("ingest batch contains a null or non-"),
+        e.getMessage)
+      // the table is untouched: the same batch with good vectors upserts
+      val before = spark.table(table).count()
+      AnnIndex.upsertIvfIndex(spark, table, batch, "vec_id", "embedding")
+      assert(spark.table(table).count() === before)
+    } finally graft.queries.Tables.reset(spark, side: _*)
+  }
+
+  test("a legacy bucketed-only table is rejected with the rebuild command") {
+    val table = "annidx_legacy"
+    val side = Seq(table, s"${table}__centroids", s"${table}__meta",
+      s"${table}__compacting", s"${table}__old")
+    graft.queries.Tables.reset(spark, side: _*)
+    AnnIndex.writeIvfIndex(emb, "vec_id", "embedding", step = 50,
+      table = table, buckets = 4, force = true)
+    try {
+      // rewrite the rows in the pre-per-list layout: file-bucketed only
+      val rows = spark.table(table).drop(AnnIndex.PartCol)
+        .localCheckpoint(eager = true)
+      spark.sql(s"DROP TABLE `$table`")
+      rows.write.format("parquet").bucketBy(4, "bucket").sortBy("bucket")
+        .saveAsTable(table)
+      val batch = emb.where(col("vec_id") % 97 === 3)
+      val calls = Seq[() => Any](
+        () => AnnIndex.ivfKnnIndexed(spark, table,
+          emb.where(col("vec_id") % 100 === 0), "vec_id", "embedding",
+          k = 5, nprobe = 3).collect(),
+        () => AnnIndex.upsertIvfIndex(spark, table, batch, "vec_id",
+          "embedding"),
+        () => AnnIndex.compactIvfIndex(spark, table,
+          AnnIndex.assignNew(spark, table, batch, "vec_id", "embedding")))
+      calls.foreach { call =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains("legacy bucketed-only"), e.getMessage)
+        assert(e.getMessage.contains(s"--table $table --force"), e.getMessage)
+      }
+      assert(!spark.table(table).columns.contains(AnnIndex.PartCol))
+    } finally graft.queries.Tables.reset(spark, side: _*)
+  }
 }

@@ -21,4 +21,17 @@ trait SparkTestBase extends AnyFunSuite {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Ids of the Spark jobs `f` submits from this thread in `s`'s
+    * context (AQE stage jobs included) — a job group plus the status
+    * tracker, read after the listener bus drains.
+    */
+  def jobIdsOf(s: SparkSession = spark)(f: => Any): Seq[Int] = {
+    val sc = s.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, group)
+    try f finally sc.clearJobGroup()
+    org.apache.spark.graft.ListenerDrain.drain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).toSeq
+  }
 }
